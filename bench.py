@@ -29,7 +29,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 ONLY = [q for q in os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").split(",") if q]
 N_FLAGSHIP = int(os.environ.get("SPARK_GRAFT_BENCH_ROWS", "200000000"))
 # 1M payload rows: at 200k the e2e number was fixed-cost dominated
@@ -142,7 +142,8 @@ def ensure_images(spark) -> None:
     from ionex_spark.sources.images import write_images
 
     t0 = time.time()
-    write_images(spark, N_IMAGES, IMAGES_PATH, partitions=CPUS * 2)
+    # default file count: the ~300 id-range audit shards
+    write_images(spark, N_IMAGES, IMAGES_PATH)
     print(
         f"# generated {N_IMAGES} images in {time.time() - t0:.1f}s",
         file=sys.stderr,

@@ -8,6 +8,9 @@ batching, verification) while staying deterministic:
 - ``dct`` — a tiny 8x8 block-DCT codec with uniform quantization, lossy:
   exercises the PSNR >= 40 dB verification path of BASELINE.json.input_hint.
 
+Both decode through one batched kernel, ``decode_planes`` (N same-shape
+payloads per call); ``ppm_decode``/``dct_decode`` are its one-payload case.
+
 Plus ``psnr`` and a 64-bit perceptual hash ``phash64`` (8x8 block-mean DCT
 sign hash) used for dedup/verification.  Any *other* ``fmt`` value decodes
 via NotImplementedError — the documented stub for real-world codecs that
@@ -23,22 +26,23 @@ _Q = 6.0  # DCT quantization step: keeps PSNR well above 40 dB for smooth blocks
 
 # ---------------------------------------------------------------- PPM (P6)
 
+def _ppm_header(w: int, h: int) -> bytes:
+    return b"P6\n%d %d\n255\n" % (w, h)
+
+
 def ppm_encode(pixels: np.ndarray) -> bytes:
     """uint8 HxWx3 array -> binary PPM bytes."""
     h, w, c = pixels.shape
     assert c == 3 and pixels.dtype == np.uint8
-    return b"P6\n%d %d\n255\n" % (w, h) + pixels.tobytes()
+    return _ppm_header(w, h) + pixels.tobytes()
 
 
 def ppm_decode(data: bytes) -> np.ndarray:
     """Binary PPM bytes -> uint8 HxWx3 array."""
     if not data.startswith(b"P6"):
         raise ValueError("not a P6 PPM")
-    parts = data.split(b"\n", 3)
-    w, h = (int(x) for x in parts[1].split())
-    maxval = int(parts[2])
-    assert maxval == 255
-    return np.frombuffer(parts[3], dtype=np.uint8, count=h * w * 3).reshape(h, w, 3)
+    w, h = (int(x) for x in data.split(b"\n", 2)[1].split())
+    return decode_planes([data], "ppm", w, h)[0].transpose(1, 2, 0)
 
 
 # ------------------------------------------------------------- DCT (lossy)
@@ -63,6 +67,10 @@ def _blockify(img: np.ndarray) -> tuple[np.ndarray, int, int]:
     return blocks, h, w
 
 
+def _dct_header(w: int, h: int) -> bytes:
+    return b"DCT1" + np.array([h, w], dtype=np.int32).tobytes()
+
+
 def dct_encode(pixels: np.ndarray) -> bytes:
     """uint8 HxWx3 -> quantized block-DCT bytes (int16 coefficients)."""
     h, w, _ = pixels.shape
@@ -71,37 +79,66 @@ def dct_encode(pixels: np.ndarray) -> bytes:
         blocks, _, _ = _blockify(pixels[:, :, ch].astype(np.float64) - 128.0)
         coef = _DCT8 @ blocks @ _DCT8.T
         planes.append(np.round(coef / _Q).astype(np.int16))
-    head = b"DCT1" + np.array([h, w], dtype=np.int32).tobytes()
-    return head + np.stack(planes).tobytes()
+    return _dct_header(w, h) + np.stack(planes).tobytes()
 
 
 def dct_decode(data: bytes) -> np.ndarray:
     if not data.startswith(b"DCT1"):
         raise ValueError("not a DCT1 payload")
-    h, w = np.frombuffer(data, dtype=np.int32, count=2, offset=4)
+    h, w = (int(x) for x in np.frombuffer(data, np.int32, 2, 4))
+    return np.ascontiguousarray(
+        decode_planes([data], "dct", w, h)[0].transpose(1, 2, 0)
+    )
+
+
+# -------------------------------------------------------- batched decode
+
+def decode_planes(payloads: list, fmt: str, w: int, h: int) -> np.ndarray:
+    """Decode N same-shape payloads into (N, 3, h, w) uint8 channel
+    planes with ONE batched pipeline; ppm_decode / dct_decode are its
+    one-payload case.  Every payload must carry the header its codec
+    writes for (w, h), else ValueError.  The dct path stacks all
+    coefficient buffers and runs the per-8x8-block matmul kernels once
+    (matmul broadcasts over leading axes with identical per-slice
+    results), so a batch decodes bit-identically to its rows one by
+    one."""
+    if fmt not in ("ppm", "dct"):
+        raise _unsupported(fmt)
+    n = len(payloads)
+    head = _ppm_header(w, h) if fmt == "ppm" else _dct_header(w, h)
+    hl = len(head)
+    if not all(p[:hl] == head for p in payloads):
+        raise ValueError(f"payload header does not match {fmt} {w}x{h}")
+    if fmt == "ppm":
+        flat = np.stack([
+            np.frombuffer(p, np.uint8, h * w * 3, hl) for p in payloads
+        ])
+        return flat.reshape(n, h, w, 3).transpose(0, 3, 1, 2)
     H, W = h + ((-h) % 8), w + ((-w) % 8)
     nb = (H // 8) * (W // 8) * 64
-    out = np.empty((h, w, 3), dtype=np.uint8)
-    for ch in range(3):
-        coef = np.frombuffer(
-            data, dtype=np.int16, count=nb, offset=12 + ch * nb * 2
-        ).astype(np.float64).reshape(H // 8, W // 8, 8, 8) * _Q
-        blocks = _DCT8.T @ coef @ _DCT8
-        plane = blocks.transpose(0, 2, 1, 3).reshape(H, W)[:h, :w] + 128.0
-        out[:, :, ch] = np.clip(np.round(plane), 0, 255).astype(np.uint8)
-    return out
+    coef = np.stack([
+        np.frombuffer(p, np.int16, 3 * nb, hl) for p in payloads
+    ]).astype(np.float64).reshape(n, 3, H // 8, W // 8, 8, 8) * _Q
+    blocks = _DCT8.T @ coef @ _DCT8
+    planes = blocks.transpose(0, 1, 2, 4, 3, 5).reshape(n, 3, H, W)
+    planes = planes[:, :, :h, :w] + 128.0
+    return np.clip(np.round(planes), 0, 255).astype(np.uint8)
 
 
 # ------------------------------------------------------------ dispatch API
+
+def _unsupported(fmt: str) -> NotImplementedError:
+    return NotImplementedError(
+        f"codec {fmt!r} requires an external image library (not in sandbox)"
+    )
+
 
 def encode_image(pixels: np.ndarray, fmt: str) -> bytes:
     if fmt == "ppm":
         return ppm_encode(pixels)
     if fmt == "dct":
         return dct_encode(pixels)
-    raise NotImplementedError(
-        f"codec {fmt!r} requires an external image library (not in sandbox)"
-    )
+    raise _unsupported(fmt)
 
 
 def decode_image(data: bytes, fmt: str) -> np.ndarray:
@@ -109,9 +146,7 @@ def decode_image(data: bytes, fmt: str) -> np.ndarray:
         return ppm_decode(data)
     if fmt == "dct":
         return dct_decode(data)
-    raise NotImplementedError(
-        f"codec {fmt!r} requires an external image library (not in sandbox)"
-    )
+    raise _unsupported(fmt)
 
 
 # --------------------------------------------------------------- verify ops

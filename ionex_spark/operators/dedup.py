@@ -314,119 +314,6 @@ def jaccard_verify(
     )
 
 
-def connected_components(
-    nodes: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Connected components over near-dup candidate pairs -> dedup GROUPS:
-    every document labeled with the smallest doc id reachable through the
-    pair graph (the canonical representative), isolated docs labeling
-    themselves.  Output: (doc_id, group_id).
-
-    Iterative min-label propagation: each round every node takes the min
-    of its own label and its neighbors' labels; converges in O(graph
-    diameter) rounds — near-dup clusters are shallow (dozens of docs, a
-    hub-and-spoke shape), so this terminates in a handful of rounds where
-    a 100 TB adversarial graph would want the alternating large-star/
-    small-star variant (same join primitive, O(log n) rounds).  Each
-    round is ONE shuffle (groupBy node); lineage is cut per round with
-    localCheckpoint so the plan stays flat."""
-    # cut the pair pipeline's lineage BEFORE the symmetric union: the
-    # union's two branches otherwise each re-evaluate the full verified-
-    # pair pipeline (LSH candidates + jaccard verify) from the scan
-    # (guide §2.4 — one pass, not two)
-    pairs = pairs.select("id_a", "id_b").localCheckpoint(eager=True)
-    sym = pairs.selectExpr("id_a as src", "id_b as dst").unionByName(
-        pairs.selectExpr("id_b as src", "id_a as dst")
-    )
-    # lazy checkpoint: the count below (needed anyway for the iteration
-    # width) is the materializing action — one job instead of two
-    sym = sym.localCheckpoint(eager=False)
-    # iteration shuffle width sized to the graph, not the session: on a
-    # tiny verified-pair graph full-width rounds are pure fixed overhead
-    # (the star variant's measurement); a huge graph keeps full width.
-    # The initial labels frame is repartitioned to that width BEFORE its
-    # checkpoint too (round 7): it otherwise inherits the input scan's
-    # partitioning and every first-round stage pays those tasks.
-    spark = sym.sparkSession
-    default_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    labels = nodes.selectExpr(f"{id_col} as node", f"{id_col} as label")
-    n_nodes = labels.count()
-    parts = max(
-        1,
-        min(default_parts, (sym.count() + n_nodes) // 500_000 + 1),
-    )
-    # lazy again: the prev_sum aggregate (numeric ids) or the first
-    # round's join (fallback) materializes the checkpoint in ITS job —
-    # the engine's per-round serial-job floor is the dominant cost of
-    # this operator at gate scale (guide §1.2: fix the job shape first)
-    labels = labels.repartition(parts, "node").localCheckpoint(eager=False)
-    # Convergence check: for INTEGRAL ids, labels only ever DECREASE, so
-    # sum(label) is strictly decreasing until the fixpoint — one cheap
-    # aggregate per round on the already-checkpointed frame.  The shortcut
-    # is gated on IntegralType (and scale-0 decimals), NOT NumericType:
-    # fractional float/double labels lose their fraction in the
-    # decimal(38,0) cast (1.4 -> 1.2 sums equal), which would declare
-    # convergence early and silently split components.  Non-integral ids
-    # (or a NULL sum, e.g. decimal overflow) fall back to the exact
-    # join-based changed-count: a NULL-poisoned sum comparing equal would
-    # otherwise report convergence after one hop — silent wrong groups.
-    from pyspark.sql.types import DecimalType, IntegralType
-
-    _dt = labels.schema["label"].dataType
-    numeric_ids = isinstance(_dt, IntegralType) or (
-        isinstance(_dt, DecimalType) and _dt.scale == 0
-    )
-    _sum = F.sum(F.col("label").cast("decimal(38,0)"))
-
-    def _changed(old: DataFrame, new: DataFrame, s_old, s_new) -> int:
-        if numeric_ids and s_old is not None and s_new is not None:
-            return int(s_new != s_old)
-        return (
-            new.alias("n")
-            .join(old.alias("o"), "node")
-            .filter("n.label < o.label")
-            .count()
-        )
-
-    prev_sum = labels.agg(_sum).first()[0] if numeric_ids else None
-    changed = 1
-    for _ in range(max_iter):
-        incoming = (
-            sym.join(labels, sym.src == labels.node)
-            .selectExpr("dst as node", "label")
-        )
-        new_labels = (
-            labels.unionByName(incoming)
-            # explicit width: the following aggregate reuses this
-            # hash partitioning (partial+final, no further exchange)
-            .repartition(parts, "node")
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            # lazy: the convergence aggregate below is the materializing
-            # action, fusing the old checkpoint-then-sum round (2 serial
-            # jobs) into one — the removed per-round job barriers are
-            # most of this operator's cost at gate scale
-            .localCheckpoint(eager=False)
-        )
-        new_sum = new_labels.agg(_sum).first()[0] if numeric_ids else None
-        changed = _changed(labels, new_labels, prev_sum, new_sum)
-        labels, prev_sum = new_labels, new_sum
-        if changed == 0:
-            break
-    else:
-        # a silent partial result would split one component into several
-        # groups and keep duplicate docs — refuse instead
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iter}"
-            f" rounds (labels still changing); the graph diameter exceeds"
-            f" max_iter — raise it or use a star-contraction variant"
-        )
-    return labels.selectExpr(f"node as {id_col}", "label as group_id")
-
-
 def _cc_numpy_labels(u, v):
     """Vectorized exact connected components over numpy id arrays:
     Shiloach-Vishkin-style min-label hooking + pointer doubling.
@@ -495,26 +382,27 @@ def connected_components_star(
     max_iter: int = 30,
     local_threshold: int = 5_000_000,
 ) -> DataFrame:
-    """Connected components via alternating LARGE-STAR / SMALL-STAR
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC 2014) — the O(log n)-round escalation of
-    connected_components' min-label propagation, for ADVERSARIAL graphs
-    whose diameter is large (a 10^6-doc duplicate chain converges in
-    ~20 rounds here vs 10^6 rounds of label propagation).
+    """Connected components over near-dup candidate pairs -> dedup GROUPS:
+    every document labeled with the smallest doc id reachable through the
+    pair graph (the canonical representative), isolated docs labeling
+    themselves.  Output: (doc_id, group_id).
+
+    Distributed path: alternating LARGE-STAR / SMALL-STAR contraction
+    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    SoCC 2014) — O(log n) rounds even on ADVERSARIAL graphs whose
+    diameter is large (a 10^6-doc duplicate chain converges in ~20
+    rounds, where per-hop label propagation would need 10^6).
 
     large-star: every node's strictly-LARGER neighbors re-attach to the
     minimum of its closed neighborhood; small-star: after orienting each
     edge large->small, the smaller-or-equal neighbors re-attach to that
     minimum.  Both keep components intact and monotonically shrink to
-    per-component stars whose center is the component minimum.  Each
-    half-round is ONE groupBy shuffle; lineage is cut per round with
-    eager localCheckpoint.  Output: (doc_id, group_id), isolated docs
-    labeling themselves — identical contract to connected_components.
+    per-component stars whose center is the component minimum.
 
-    Requires ids orderable by min(); works for any orderable type (the
-    sum-shortcut subtlety of the label-propagation variant does not
-    apply — convergence is detected by the edge-set checksum + count,
-    with an exact except()-based confirmation before accepting it).
+    Requires ids orderable by min(); works for any orderable type
+    (integers, strings, fractional doubles): convergence is detected by
+    the edge-set checksum + count, with an exact exceptAll()-based
+    confirmation before accepting it, so no id arithmetic is involved.
 
     Constant-factor shape (round-4 verdict task #7).  Measured reality:
     VERIFIED near-dup edge sets are tiny relative to the corpus (256
@@ -525,8 +413,8 @@ def connected_components_star(
 
     - edge sets at or under ``local_threshold`` (default 5M — a few
       hundred MB of pairs, trivially one task's memory) are solved
-      EXACTLY in one mapInPandas task by path-compressed union-find
-      with union-by-minimum (same min-root contract), one job total;
+      EXACTLY in one mapInPandas task by the vectorized min-root
+      union-find of _cc_numpy_labels (same contract), one job total;
     - larger edge sets run the distributed star-contraction rounds:
       the iteration's shuffle width adapts to the edge count (~500k
       edges/partition, capped at the session default), each
@@ -962,7 +850,7 @@ def group_representatives(
     arbitrary min-id keeper, keep the BEST-quality member (ties broken
     by smallest id, so the choice is total and deterministic).
 
-    members: (id, group) from connected_components; scored: (id,
+    members: (id, group) from connected_components_star; scored: (id,
     score_fp) with an int64 fixed-point score (e.g. floor(quality*1e6)
     — integers so cross-engine comparison is exact).  The argmax rides
     the tile_representative trick: pack (score_fp, 2^41-1-id) into ONE
@@ -1112,7 +1000,7 @@ def contamination_safe_split(
     frame); the split proportions are exact-in-expectation over
     groups, so heavily duplicated content cannot bias eval upward.
 
-    Input: (id, group) from connected_components.  Output adds
+    Input: (id, group) from connected_components_star.  Output adds
     ``split``."""
     from ionex_spark.operators.text import sample_hash_sql
 

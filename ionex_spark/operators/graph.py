@@ -12,7 +12,7 @@ CTE (the property the engine's whole gate methodology is built on).
 
 Scale shape: each iteration is ONE join (ranks x out-edges, both keyed
 by node) + ONE aggregation shuffle on dst; iteration shuffle width
-adapts to the edge count like the connected-components operators, and
+adapts to the edge count like the connected-components operator, and
 lineage is cut every second round.  Rounds are a fixed caller-chosen
 constant (power iteration converges geometrically; corpus ranking uses
 5-20 rounds), so the total cost is O(iters * E / cluster).

@@ -21,23 +21,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, DoubleType, LongType
+from pyspark.sql.types import BooleanType, LongType
 
-
-@F.pandas_udf(DoubleType())
-def verify_psnr(data: pd.Series, fmt: pd.Series, w: pd.Series,
-                h: pd.Series, image_id: pd.Series) -> pd.Series:
-    """PSNR of the decoded payload vs the deterministic generator source
-    (inf for lossless). image_id 'img{i:012d}' carries the generator seed."""
-    from ionex_spark.core import codec, synth
-
-    out = np.empty(len(data), dtype=np.float64)
-    for k in range(len(data)):
-        i = int(image_id.iloc[k][3:])
-        dec = codec.decode_image(data.iloc[k], fmt.iloc[k])
-        src = synth.image_pixels(i, int(w.iloc[k]), int(h.iloc[k]))
-        out[k] = codec.psnr(src, dec)
-    return pd.Series(out)
+from ionex_spark.core.codec import decode_planes
 
 
 @F.pandas_udf(LongType())
@@ -190,35 +176,22 @@ def _sse_vs_source(dec_planes, ids: np.ndarray, w: int, h: int) -> np.ndarray:
     return sse
 
 
-def _decode_planes_batch(payloads: list, fmt: str, w: int, h: int):
-    """Decode N same-shape payloads into (N, 3, h, w) uint8 channel
-    planes with ONE batched pipeline per group.  The dct path stacks all
-    coefficient buffers and runs the same per-8x8-block matmul kernels
-    codec.dct_decode uses (matmul broadcasts over leading axes with
-    identical per-slice results), so the decoded pixels are bit-identical
-    to row-at-a-time decoding."""
-    from ionex_spark.core.codec import _DCT8, _Q
+# what decoding a truncated, mislabeled or NULL payload raises
+_BAD_PAYLOAD = (ValueError, TypeError, NotImplementedError)
 
-    n = len(payloads)
-    if fmt == "ppm":
-        hdr = len(b"P6\n%d %d\n255\n" % (w, h))
-        flat = np.stack([
-            np.frombuffer(p, np.uint8, h * w * 3, hdr) for p in payloads
-        ])
-        return flat.reshape(n, h, w, 3).transpose(0, 3, 1, 2)
-    if fmt != "dct":
-        raise NotImplementedError(
-            f"codec {fmt!r} requires an external image library (not in sandbox)"
-        )
-    H, W = h + ((-h) % 8), w + ((-w) % 8)
-    nb = (H // 8) * (W // 8) * 64
-    coef = np.stack([
-        np.frombuffer(p, np.int16, 3 * nb, 12) for p in payloads
-    ]).astype(np.float64).reshape(n, 3, H // 8, W // 8, 8, 8) * _Q
-    blocks = _DCT8.T @ coef @ _DCT8
-    planes = blocks.transpose(0, 1, 2, 4, 3, 5).reshape(n, 3, H, W)
-    planes = planes[:, :, :h, :w] + 128.0
-    return np.clip(np.round(planes), 0, 255).astype(np.uint8)
+
+def _decode_rows(payloads: list, sel: np.ndarray, fmt: str, w: int, h: int):
+    """Per-row fallback of one failed batch decode: (mask of the rows of
+    ``sel`` that decode, their stacked (n, 3, h, w) planes)."""
+    ok = np.zeros(len(sel), dtype=bool)
+    planes = []
+    for j, k in enumerate(sel):
+        try:
+            planes.append(decode_planes([payloads[k]], fmt, w, h)[0])
+            ok[j] = True
+        except _BAD_PAYLOAD:
+            pass
+    return ok, np.asarray(planes, dtype=np.uint8)
 
 
 def _captions_batch(ids: np.ndarray) -> list:
@@ -255,7 +228,12 @@ def verify_payloads(images: DataFrame, min_psnr: float = 40.0) -> DataFrame:
     regenerates its generator sources and accumulates exact integer SSE
     through single vectorized numpy pipelines.  Replaces two pandas_udf
     evaluations whose per-row decode plus the bytes column's
-    Arrow->pandas->Arrow round-trip dominated the stage."""
+    Arrow->pandas->Arrow round-trip dominated the stage.
+
+    Bad input is a flagged row, never a failed task: a chunk whose
+    batched decode raises (a truncated, mislabeled or NULL payload) is
+    re-decoded row by row, and only the rows that still fail come back
+    with payload_ok = false and psnr_db = -inf."""
     import pyarrow as pa
 
     src = images.select("image_id", "bytes", "fmt", "w", "h", "caption")
@@ -286,9 +264,18 @@ def verify_payloads(images: DataFrame, min_psnr: float = 40.0) -> DataFrame:
                 # (~4096 64x64 images = ~50 MB per decoded plane stack)
                 for lo in range(0, len(rows), 4096):
                     sel = rows[lo:lo + 4096]
-                    dec = _decode_planes_batch(
-                        [payloads[k] for k in sel], fmt, w, h
-                    )
+                    try:
+                        dec = decode_planes(
+                            [payloads[k] for k in sel], fmt, w, h
+                        )
+                    except _BAD_PAYLOAD:
+                        # a corrupt payload flags its own row, not the
+                        # task: re-decode the chunk row by row
+                        ok, dec = _decode_rows(payloads, sel, fmt, w, h)
+                        psnr[sel[~ok]] = -np.inf
+                        sel = sel[ok]
+                        if not len(sel):
+                            continue
                     sse = _sse_vs_source(dec, ids[sel], w, h)
                     npix = float(h * w * 3)
                     with np.errstate(divide="ignore"):
@@ -310,18 +297,6 @@ def verify_payloads(images: DataFrame, min_psnr: float = 40.0) -> DataFrame:
             )
 
     return src.mapInArrow(fn, out_schema)
-
-
-@F.pandas_udf(BooleanType())
-def _caption_matches(image_id: pd.Series, caption: pd.Series) -> pd.Series:
-    """Strict caption equality vs the deterministic generator."""
-    from ionex_spark.core import synth
-
-    out = np.zeros(len(image_id), dtype=bool)
-    for k in range(len(image_id)):
-        i = int(image_id.iloc[k][3:])
-        out[k] = synth.caption_of(i) == caption.iloc[k]
-    return pd.Series(out)
 
 
 def phash_near_dup_pairs(

@@ -132,43 +132,31 @@ FROM r GROUP BY src
 """
 
 
-# priority 10: min-label CC variant; dedup_groups_star (the O(log n)
-# 100 TB default) stays gated and shares this oracle
+# dedup_groups and dedup_groups_star are one plan under two gated names
+# (gate history and bench leaves key on both); they share this oracle
 @register("dedup_groups", oracle=_DUCK_GROUPS_SQL, priority=100)  # r7: plan restructured (see NEW_THIS_ROUND)
 def dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup GROUP assignment — the step after pair detection a real
     pipeline needs: connected components over the verified near-dup pair
-    graph (iterative min-label propagation), every doc labeled with its
-    canonical representative (min reachable id).  Oracle: DuckDB
-    recursive-CTE transitive closure."""
+    graph (dedup.connected_components_star: local union-find under the
+    edge threshold, O(log n) large-star/small-star rounds above), every
+    doc labeled with its canonical representative (min reachable id).
+    Oracle: DuckDB recursive-CTE transitive closure."""
     docs = read_split(spark, f"{sf_dir}/documents.parquet")
     # the pair pipeline IS dedup_minhash_pairs — one definition, so the
     # Spark side can never drift from the shared _DUCK_PAIRS_SQL oracle
-    pairs = dedup_minhash_pairs(spark, sf_dir)
-    groups = dd.connected_components(docs.select("doc_id"), pairs)
-    return groups.selectExpr(
-        "doc_id", "group_id",
-        "CASE WHEN doc_id = group_id THEN 1 ELSE 0 END as is_keeper",
-    )
-
-
-# shares dedup_groups' recursive-CTE oracle: any divergence between the
-# two CC algorithms fails the gate
-@register("dedup_groups_star", oracle=_DUCK_GROUPS_SQL, priority=100)  # r7: plan restructured
-def dedup_groups_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup_groups through the O(log n) LARGE-STAR/SMALL-STAR contraction
-    (dedup.connected_components_star) instead of min-label propagation —
-    the adversarial-graph escalation (deep duplicate chains): same
-    groups, logarithmic rounds.  Shares dedup_groups' recursive-CTE
-    oracle, so any divergence between the two CC algorithms fails the
-    gate."""
-    docs = read_split(spark, f"{sf_dir}/documents.parquet")
     pairs = dedup_minhash_pairs(spark, sf_dir)
     groups = dd.connected_components_star(docs.select("doc_id"), pairs)
     return groups.selectExpr(
         "doc_id", "group_id",
         "CASE WHEN doc_id = group_id THEN 1 ELSE 0 END as is_keeper",
     )
+
+
+@register("dedup_groups_star", oracle=_DUCK_GROUPS_SQL, priority=100)  # r7: plan restructured
+def dedup_groups_star(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The dedup_groups plan under its second gated name."""
+    return dedup_groups(spark, sf_dir)
 
 
 def _duck_simhash_sig() -> str:
@@ -1423,8 +1411,8 @@ def snapshot_diff_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "embedding_dedup_groups",
     # priority 10 = past the 50-entry window (composition of two already-
-    # gated pipelines: embedding_near_dups pairs + the star-contraction
-    # CC exercised by dedup_groups_star); still check_oracle-verifiable.
+    # gated pipelines: embedding_near_dups pairs + the connected-components
+    # operator exercised by dedup_groups); still check_oracle-verifiable.
     priority=10,
     oracle=f"""
 WITH RECURSIVE pairs AS ({{EMB_PAIRS}}),
@@ -2478,12 +2466,9 @@ def dedup_group_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup.group_representatives); the oracle recomputes the transitive
     closure AND the packed argmax in SQL.
 
-    Round 7: components come from the SCALE-ADAPTIVE star variant (the
-    codebase's documented 100 TB default — local union-find in one task
-    under the edge threshold, O(log n) star contraction above) instead
-    of iterative min-label propagation: identical groups (component
-    minima — the two algorithms share dedup_groups' oracle), a fraction
-    of the job rounds (guide §1.2: fix the distributed algorithm first)."""
+    Components come from the scale-adaptive connected_components_star
+    (local union-find in one task under the edge threshold, O(log n)
+    star contraction above) — the same groups dedup_groups gates."""
     docs = read_split(spark, f"{sf_dir}/documents.parquet")
     pairs = dedup_minhash_pairs(spark, sf_dir)
     members = dd.connected_components_star(docs.select("doc_id"), pairs)
@@ -2824,11 +2809,7 @@ def contamination_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-duplicate of an eval doc — the contamination a doc-level
     random split commits whenever dup pairs exist
     (dedup.contamination_safe_split; property test proves zero minhash
-    pairs cross splits).
-
-    Round 7: components via the scale-adaptive star variant (see
-    dedup_group_representatives — identical groups, shared-oracle-
-    proven, far fewer rounds than min-label propagation)."""
+    pairs cross splits).  Components as in dedup_group_representatives."""
     docs = read_split(spark, f"{sf_dir}/documents.parquet")
     pairs = dedup_minhash_pairs(spark, sf_dir)
     members = dd.connected_components_star(docs.select("doc_id"), pairs)

@@ -21,7 +21,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     master = master or f"local[{cpus}]"
     # local mode: shuffle partitions ~ cores; cluster: ~2-3x total cores
     shuffle = shuffle_partitions or cpus

@@ -67,19 +67,18 @@ def write_images(spark: SparkSession, n: int, path: str, partitions=None) -> Non
     """Materialize to parquet partition-parallel; bucket-ish layout by id
     ranges (what Iceberg `bucket(N, image_id)` would give us).
 
-    File count = ``partitions`` (the generation parallelism), raised to
-    ~3/_AUDIT_GRANULARITY id-range shards once every shard still holds
-    >= 1000 rows.  Why (guide §6 — layout determines how well readers can
-    skip): the payload audit (multimodal.audit_sample_files) samples
+    File count = ``partitions`` when given.  Otherwise the generation
+    parallelism, raised to ~3/_AUDIT_GRANULARITY id-range shards once
+    every shard still holds >= 1000 rows.  Why (guide §6 — layout
+    determines how well readers can skip): the payload audit (multimodal.audit_sample_files) samples
     whole FILES, so with F files the smallest realizable audit is 1/F of
     the table and round(f*F)/F only tracks the requested fraction when
     F >> 1/f.  At 64 files a "1 %" audit must read 1.56 % of the bytes in
     one serial scan task; at 300 it reads 3 files = 1.00 % in parallel.
     Production tables exceed 1/f files anyway (the policy is a no-op
-    there); small fixture tables keep the caller's exact count, which
-    tests pin."""
+    there); an explicit ``partitions`` is always honoured."""
     shards = int(round(3 / _AUDIT_GRANULARITY))
     parts = partitions or max(1, min(64, n // 2000 or 1))
-    if n >= 1000 * shards:
+    if partitions is None and n >= 1000 * shards:
         parts = max(parts, shards)
     images_df(spark, n, parts).write.mode("overwrite").parquet(path)

@@ -317,24 +317,39 @@ def test_knn_fallback_metrics_pathological_sparse(spark):
         assert got[got["qid"] == qid]["cid"].tolist() == want, qid
 
 
+# local_threshold=0 forces the distributed star rounds; the default takes
+# the single-task union-find path — every CC fixture runs on both
+_CC_PATHS = (0, 5_000_000)
+
+
+def _cc_labels(nodes, pairs, **kw):
+    return {
+        r.doc_id: r.group_id
+        for r in dd.connected_components_star(nodes, pairs, **kw).collect()
+    }
+
+
 def test_connected_components_chain_and_convergence_guard(spark):
-    """A 30-doc chain is one group (label = min id) when max_iter covers
-    the diameter, and raises instead of silently splitting when not."""
+    """A 30-doc chain is one group (label = min id) on both paths, and the
+    distributed path raises instead of silently splitting when max_iter
+    is too small for the chain."""
     nodes = spark.range(32).selectExpr("id as doc_id")
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(29)], "id_a bigint, id_b bigint"
     )
-    got = dd.connected_components(nodes, chain, max_iter=30).toPandas()
-    labels = dict(zip(got["doc_id"], got["group_id"]))
-    assert all(labels[i] == 0 for i in range(30))
-    assert labels[30] == 30 and labels[31] == 31  # isolated docs
+    for thr in _CC_PATHS:
+        labels = _cc_labels(nodes, chain, local_threshold=thr)
+        assert all(labels[i] == 0 for i in range(30)), thr
+        assert labels[30] == 30 and labels[31] == 31, thr  # isolated docs
     with pytest.raises(RuntimeError, match="did not converge"):
-        dd.connected_components(nodes, chain, max_iter=3)
+        dd.connected_components_star(
+            nodes, chain, max_iter=2, local_threshold=0
+        ).collect()
 
 
 def test_connected_components_string_ids(spark):
-    """Non-numeric ids use the join-based convergence check (the sum
-    shortcut would NULL-poison on a string cast and stop after one hop)."""
+    """Non-numeric ids: both paths order strings by min(), with no id
+    arithmetic anywhere in the convergence check."""
     nodes = spark.createDataFrame(
         [(f"doc-{i:02d}",) for i in range(6)], "doc_id string"
     )
@@ -342,12 +357,10 @@ def test_connected_components_string_ids(spark):
         [(f"doc-{i:02d}", f"doc-{i + 1:02d}") for i in range(4)],
         "id_a string, id_b string",
     )
-    got = dict(
-        (r.doc_id, r.group_id)
-        for r in dd.connected_components(nodes, chain, max_iter=10).collect()
-    )
-    assert all(got[f"doc-{i:02d}"] == "doc-00" for i in range(5))
-    assert got["doc-05"] == "doc-05"
+    for thr in _CC_PATHS:
+        got = _cc_labels(nodes, chain, local_threshold=thr)
+        assert all(got[f"doc-{i:02d}"] == "doc-00" for i in range(5)), thr
+        assert got["doc-05"] == "doc-05", thr
 
 
 def test_whitespace_class_tokenization_parity(spark):
@@ -402,21 +415,18 @@ def test_whitespace_class_tokenization_parity(spark):
 
 
 def test_connected_components_fractional_ids(spark):
-    """Fractional double ids must use the exact join-based convergence
-    check: the decimal(38,0)-cast sum shortcut loses the fraction, so a
-    round that changes 5.4 -> 5.3 while another changes 5.3 -> 5.2 can
-    leave the rounded sum unchanged — early convergence, split groups."""
+    """Fractional double ids keep their fraction: a chain 9.0 - 5.4 - 5.3
+    - 5.2 is one group labeled 5.2 (a convergence check on rounded ids
+    would see 5.4 -> 5.3 and 5.3 -> 5.2 as no change and split it)."""
     nodes = spark.createDataFrame(
         [(9.0,), (5.4,), (5.3,), (5.2,)], "doc_id double"
     )
     chain = spark.createDataFrame(
         [(9.0, 5.4), (5.4, 5.3), (5.3, 5.2)], "id_a double, id_b double"
     )
-    got = dict(
-        (r.doc_id, r.group_id)
-        for r in dd.connected_components(nodes, chain, max_iter=10).collect()
-    )
-    assert all(v == 5.2 for v in got.values()), got
+    for thr in _CC_PATHS:
+        got = _cc_labels(nodes, chain, local_threshold=thr)
+        assert all(v == 5.2 for v in got.values()), (thr, got)
 
 
 def test_ivf_assign_empty_centroids(spark):
@@ -430,49 +440,42 @@ def test_ivf_assign_empty_centroids(spark):
 
 def test_connected_components_star_deep_chain_and_parity(spark):
     """Star contraction converges in O(log n) rounds on a 500-deep chain
-    (min-label propagation would need 500 rounds) and agrees with the
-    label-propagation variant on a random graph with isolated nodes."""
+    (per-hop label propagation would need 500 rounds) and agrees with a
+    plain-Python union-find on a random graph with isolated nodes."""
     import random
 
     nodes = spark.range(520).selectExpr("id as doc_id")
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(499)], "id_a bigint, id_b bigint"
     )
-    # local_threshold=0 forces the DISTRIBUTED star rounds; the default
-    # takes the single-task union-find shortcut — both must agree
-    for thr in (0, 5_000_000):
-        got = dict(
-            (r.doc_id, r.group_id)
-            for r in dd.connected_components_star(
-                nodes, chain, max_iter=20, local_threshold=thr
-            ).collect()
-        )
+    for thr in _CC_PATHS:
+        got = _cc_labels(nodes, chain, max_iter=20, local_threshold=thr)
         assert all(got[i] == 0 for i in range(500)), thr
         assert all(got[i] == i for i in range(500, 520)), thr  # isolated
 
     rng = random.Random(5)
-    rand_pairs = spark.createDataFrame(
-        [
-            tuple(sorted(rng.sample(range(200), 2)))
-            for _ in range(150)
-        ],
-        "id_a bigint, id_b bigint",
-    )
+    edges = [tuple(sorted(rng.sample(range(200), 2))) for _ in range(150)]
+    # reference: union-find whose root is always the component minimum
+    parent = list(range(200))
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    want = {i: find(i) for i in range(200)}
+    assert len(set(want.values())) > 1  # several components, some isolated
+
+    rand_pairs = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
     small_nodes = spark.range(200).selectExpr("id as doc_id")
-    prop = dict(
-        (r.doc_id, r.group_id)
-        for r in dd.connected_components(
-            small_nodes, rand_pairs, max_iter=50
-        ).collect()
-    )
-    for thr in (0, 5_000_000):
-        star = dict(
-            (r.doc_id, r.group_id)
-            for r in dd.connected_components_star(
-                small_nodes, rand_pairs, max_iter=20, local_threshold=thr
-            ).collect()
+    for thr in _CC_PATHS:
+        got = _cc_labels(
+            small_nodes, rand_pairs, max_iter=20, local_threshold=thr
         )
-        assert star == prop, thr
+        assert got == want, thr
 
 
 def test_lsh_multiprobe_beats_single_bucket(spark):
@@ -700,6 +703,56 @@ def test_images_source_and_verify(spark):
     assert np.isinf(ver[ver["fmt"] == "ppm"]["psnr_db"]).all()
     lossy = ver[ver["fmt"] == "dct"]["psnr_db"]
     assert (lossy >= 40.0).all() and np.isfinite(lossy).all()
+
+
+def test_verify_flags_truncated_payload_row(spark):
+    """One truncated payload among good ones of the same (fmt, w, h)
+    group: the batched decode falls back to row by row, only that row is
+    flagged (payload_ok false, psnr_db -inf), and every other verdict
+    equals the clean run's."""
+    from pyspark.sql import functions as F
+
+    from ionex_spark.sources.images import images_df
+
+    # one partition: every group arrives in one Arrow batch
+    imgs = images_df(spark, 60, partitions=1).cache()
+    clean = mm.verify_payloads(imgs).toPandas().set_index("image_id")
+    sizes = clean.groupby(["fmt", "w", "h"])["psnr_db"].transform("size")
+    bad_id = sizes[sizes >= 3].index[0]
+    bad = imgs.withColumn(
+        "bytes",
+        F.expr(
+            f"CASE WHEN image_id = '{bad_id}' THEN substr(bytes, 1, 40)"
+            " ELSE bytes END"
+        ),
+    )
+    got = mm.verify_payloads(bad).toPandas().set_index("image_id")
+    assert len(got) == len(clean)
+    assert not got.loc[bad_id, "payload_ok"]
+    assert got.loc[bad_id, "psnr_db"] == -np.inf
+    rest = got.drop(index=bad_id)
+    assert rest["payload_ok"].all() and got["caption_ok"].all()
+    assert rest["psnr_db"].equals(clean.drop(index=bad_id)["psnr_db"])
+
+
+def test_write_images_honours_explicit_partitions(spark, tmp_path,
+                                                  monkeypatch):
+    """The audit-shard floor raises only the DEFAULT file count; an
+    explicit ``partitions`` is written as given."""
+    import glob
+
+    from ionex_spark.sources import images
+
+    # a 2-shard floor that a 2000-row table already qualifies for
+    monkeypatch.setattr(images, "_AUDIT_GRANULARITY", 1.5)
+
+    def n_files(path):
+        return len(glob.glob(f"{path}/*.parquet"))
+
+    images.write_images(spark, 2000, str(tmp_path / "explicit"), partitions=1)
+    images.write_images(spark, 2000, str(tmp_path / "default"))
+    assert n_files(tmp_path / "explicit") == 1
+    assert n_files(tmp_path / "default") == 2
 
 
 def test_phash_column_matches_payload(spark):
@@ -1594,7 +1647,7 @@ def test_contamination_safe_split_no_cross_split_pairs(spark):
     from ionex_spark.plans.queries_data import dedup_minhash_pairs
 
     pairs = dedup_minhash_pairs(spark, "/root/testdata/sf0.01")
-    members = dd.connected_components(docs.select("doc_id"), pairs)
+    members = dd.connected_components_star(docs.select("doc_id"), pairs)
     split = dd.contamination_safe_split(members).cache()
 
     assert split.count() == docs.count()
