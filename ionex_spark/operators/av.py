@@ -106,8 +106,8 @@ AUDIO_FP_SCHEMA = "audio_id string, fp64 bigint"
 
 def audio_fingerprint64(audio: DataFrame) -> DataFrame:
     """64-bit audio FINGERPRINT — the audio analog of the image phash,
-    presented on the same 4x16-bit-band surface so near-dup detection
-    rides the one shared hamming kernel (dedup.hamming_pairs_from_sig).
+    one bigint column like it, so near-dup detection rides the one
+    shared hamming kernel (dedup.hamming_pairs_from_sig).
 
     Four 16-bit bands, each the CRC of a STABLE quantized aggregate:
     duration (10 ms units), dominant frequency (zero-crossing
@@ -176,8 +176,8 @@ def audio_near_dup_pairs(
     audio: DataFrame, max_hamming: int = 3
 ) -> DataFrame:
     """Audio near-duplicate pairs by fingerprint hamming — exactly the
-    phash_near_dup_pairs shape: 4x16-bit bands from the 64-bit
-    fingerprint, Manku-refined candidates, exact XOR-popcount verify.
+    phash_near_dup_pairs shape: the 64-bit fingerprint column,
+    Manku-refined candidates, exact XOR-popcount verify.
     Payload bytes never cross a shuffle (fingerprints are computed in
     one narrow pass; the join sees 16 bytes per row)."""
     from ionex_spark.operators.multimodal import phash_near_dup_pairs
@@ -222,7 +222,7 @@ def video_near_dup_pairs(
     videos: DataFrame, max_hamming: int = 3, every: int = 4
 ) -> DataFrame:
     """Video near-duplicate pairs by majority-phash signature hamming —
-    same banded kernel as image/audio/text."""
+    same block-key kernel as image/audio/text."""
     from ionex_spark.operators.multimodal import phash_near_dup_pairs
 
     return phash_near_dup_pairs(

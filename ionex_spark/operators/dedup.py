@@ -9,7 +9,7 @@ Scale design (the point of each algorithm at 100 TB):
            pairwise explosion); band bucket join shuffles on (band_id,
            band_hash) which is uniformly distributed by construction.
 - simhash: 64-bit weighted-projection sign hash; near-dups = small hamming
-           distance; banded by 16-bit chunks for candidate generation.
+           distance; Manku block-combination keys for candidate generation.
 - ngram jaccard: verification kernel for candidate pairs.
 
 Two hash backends: ``xxhash64`` (Spark built-in, JVM-fast — the production
@@ -19,7 +19,9 @@ algorithms are identical; only the token->int64 map changes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import itertools
+
+from pyspark.sql import Column, DataFrame, functions as F
 
 
 def token_hash_sql(token_expr: str, seed: int, backend: str = "md5") -> str:
@@ -69,22 +71,22 @@ def tokens_exploded(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def shingles_exploded(df: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", n: int = 3) -> DataFrame:
-    """(id, token) rows where token = word n-gram shingle.
+def _explode_shingles(df: DataFrame, id_col: str, text_col: str, n: int,
+                      distinct: bool) -> DataFrame:
+    """(id, token) rows, token = word n-gram shingle of the lowercased,
+    whitespace-class split text; docs shorter than n words fall back to
+    their full text as a single shingle.  ``distinct`` dedups the
+    shingles IN-ROW (array_distinct before the explode)."""
+    from ionex_spark.operators.text import ws_norm_sql
 
-    Shingles (not unigrams) are what make minhash discriminative: random
-    documents share stopwords but almost no 3-grams, so LSH candidate
-    counts stay near-linear instead of quadratic.  Docs shorter than n
-    words fall back to their full text as a single shingle."""
     joins = ", ' ', ".join(f"toks[i + {k}]" for k in range(n))
     expr = (
         f"case when size(toks) >= {n} then"
         f" transform(sequence(0, size(toks) - {n}), i -> concat({joins}))"
-        f" else array(concat_ws(' ', toks)) end"
+        " else array(concat_ws(' ', toks)) end"
     )
-    from ionex_spark.operators.text import ws_norm_sql
-
+    if distinct:
+        expr = f"array_distinct({expr})"
     return (
         df.selectExpr(
             id_col,
@@ -93,6 +95,16 @@ def shingles_exploded(df: DataFrame, id_col: str = "doc_id",
         )
         .selectExpr(id_col, f"explode({expr}) as token")
     )
+
+
+def shingles_exploded(df: DataFrame, id_col: str = "doc_id",
+                      text_col: str = "text", n: int = 3) -> DataFrame:
+    """(id, token) rows where token = word n-gram shingle.
+
+    Shingles (not unigrams) are what make minhash discriminative: random
+    documents share stopwords but almost no 3-grams, so LSH candidate
+    counts stay near-linear instead of quadratic."""
+    return _explode_shingles(df, id_col, text_col, n, distinct=False)
 
 
 def tokens_exploded_distinct(df: DataFrame, id_col: str = "doc_id",
@@ -117,22 +129,7 @@ def shingles_exploded_distinct(df: DataFrame, id_col: str = "doc_id",
     shingles_exploded's dropDuplicates folded into the row
     (array_distinct before explode), saving the (id, token)-wide
     exchange (guide §2.4)."""
-    joins = ", ' ', ".join(f"toks[i + {k}]" for k in range(n))
-    expr = (
-        f"case when size(toks) >= {n} then"
-        f" transform(sequence(0, size(toks) - {n}), i -> concat({joins}))"
-        f" else array(concat_ws(' ', toks)) end"
-    )
-    from ionex_spark.operators.text import ws_norm_sql
-
-    return (
-        df.selectExpr(
-            id_col,
-            f"filter(split(lower({ws_norm_sql(text_col)}), ' '),"
-            " x -> length(x) > 0) as toks",
-        )
-        .selectExpr(id_col, f"explode(array_distinct({expr})) as token")
-    )
+    return _explode_shingles(df, id_col, text_col, n, distinct=True)
 
 
 def shingles_duckdb_sql(n: int = 3, distinct: bool = True) -> str:
@@ -532,10 +529,7 @@ def simhash64(
 
     Band b's 16 bits come from bits of an independent seed-b token hash:
     per bit, sign of sum(+/-1) across the document's distinct tokens.
-    The band representation is the useful one at scale: candidate pairs
-    join on ANY equal band (standard 4-band/16-bit simhash blocking:
-    hamming distance <= 3 over the 64 bits guarantees at least one equal
-    band), and hamming distance = sum of per-band XOR popcounts.
+    The near-dup kernel folds the bands into one bigint (BANDS_TO_FP).
 
     Per-doc token dedup runs IN-ROW (array_distinct before the explode,
     tokens_exploded_distinct) instead of a dropDuplicates exchange: the
@@ -577,75 +571,48 @@ def simhash64(
     return sums.selectExpr(id_col, *band_exprs)
 
 
-def simhash_candidate_pairs(
-    sig: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Near-dup candidates: pairs sharing at least one 16-bit band
-    (guaranteed to include every pair within hamming distance 3).
-
-    One explode + ONE long-key self-join (key = xxhash64(band_id, band
-    value)) instead of four separate joins unioned — a quarter of the
-    shuffles for the same candidate set (hash collisions can only add
-    candidates, which the hamming verify rejects).
-
-    SCALE NOTE: 16-bit band values bucket ~n/65536 docs each, so
-    in-bucket pair counts grow as (n/65536)^2 — fine to ~10^8 docs,
-    quadratic at 10^10+.  Use simhash_candidate_pairs_refined (Manku
-    block combinations, ~32-bit keys) past that point; identical verified
-    output."""
-    bands = sig.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.expr(f"xxhash64(cast({b} as bigint), band_{b})")
-                    for b in range(4)
-                ]
-            )
-        ).alias("k"),
-    )
-    a = bands.withColumnRenamed(id_col, "id_a")
-    c = bands.withColumnRenamed(id_col, "id_b")
-    return (
-        a.join(c, "k")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+# The one place a 4x16-bit band signature (simhash64's output, the
+# streaming alert input) becomes the single 64-bit fingerprint the
+# near-dup kernel reads.  Bands are disjoint 16-bit fields, so they are
+# OR-ed into place; band_3 may set bit 63 and leave fp negative, which
+# the shift-then-mask block extraction of fingerprint_keys handles.
+BANDS_TO_FP = "(" + " | ".join(
+    f"shiftleft(cast(band_{b} as bigint), {16 * b})" for b in range(4)
+) + ")"
 
 
-def simhash_candidate_pairs_refined(
-    sig: DataFrame,
-    id_col: str = "doc_id",
-    n_blocks: int = 6,
-    exact_blocks: int = 3,
-) -> DataFrame:
-    """Scale-hardened candidate generation (Manku/Jain/Sarma, WWW 2007
-    §3): split the 64-bit fingerprint into ``n_blocks`` blocks and emit
-    one key per ``exact_blocks``-sized block combination — C(B, m) keys of
-    ~64*m/B bits each.
+def scheme_blocks(scheme: str, max_hamming: int) -> tuple[int, int]:
+    """Manku (n_blocks, exact_blocks) of a candidate scheme — "refined"
+    is (6, 3), "bands" (4, 1), the 4x16-bit pigeonhole blocking — after
+    checking that it is complete for ``max_hamming``: k differing bits
+    damage at most k blocks, so only pairs within n_blocks - exact_blocks
+    are sure to share a key.  Wider thresholds would silently miss pairs,
+    hence the raise."""
+    n_blocks, exact_blocks = (6, 3) if scheme == "refined" else (4, 1)
+    if max_hamming > n_blocks - exact_blocks:
+        raise ValueError(
+            "blocked candidate generation is only complete for"
+            f" max_hamming <= {n_blocks - exact_blocks}; got {max_hamming}"
+        )
+    return n_blocks, exact_blocks
 
-    Completeness: k differing bits damage at most k blocks, so a pair
-    within hamming distance B - m has >= m intact blocks and therefore
-    shares at least one combination key (both docs agree on every block
-    of some m-subset of the intact blocks).  Default (6, 3) covers
-    hamming <= 3 exactly like the 4x16 band scheme, but with ~32-bit keys
-    instead of 16-bit: expected bucket size drops from n/2^16 to n/2^32,
-    so in-bucket self-join pair counts stay near-linear at 10^10+ docs
-    where the band scheme's (n/65536)^2 goes quadratic — at the cost of
+
+def fingerprint_keys(fp: str, n_blocks: int, exact_blocks: int) -> Column:
+    """Candidate keys of the 64-bit fingerprint column ``fp``
+    (Manku/Jain/Sarma, WWW 2007 §3): split it into ``n_blocks`` blocks
+    and hash every ``exact_blocks``-sized block combination together with
+    its combination index — an array of C(B, m) keys of ~64*m/B bits
+    each, which callers explode and equi-join on.
+
+    (4, 1) is the 4x16-bit band scheme: key b is
+    xxhash64(b, 16-bit band b).  Its buckets hold ~n/65536 docs, so
+    in-bucket pair counts grow as (n/65536)^2 — quadratic at 10^10+
+    docs.  (6, 3) covers the same hamming <= 3 with ~32-bit keys
+    (buckets ~n/2^32, near-linear at that scale) at the cost of
     C(6,3)=20 exploded rows per doc instead of 4.  Key hash collisions
     can only ADD candidates, which the exact hamming verify rejects."""
-    import itertools
-
     if not 0 < exact_blocks <= n_blocks <= 64:
         raise ValueError(f"bad scheme ({n_blocks}, {exact_blocks})")
-    # reassemble the fingerprint from the 4x16-bit bands (disjoint bits,
-    # so bitwise OR; the top band may set bit 63 -> fp can be negative,
-    # which shiftright+mask below handles)
-    fp = (
-        "(band_0 | shiftleft(band_1, 16)"
-        " | shiftleft(band_2, 32) | shiftleft(band_3, 48))"
-    )
     base, rem = divmod(64, n_blocks)
     lens = [base + (1 if i < rem else 0) for i in range(n_blocks)]
     starts = [sum(lens[:i]) for i in range(n_blocks)]
@@ -654,20 +621,45 @@ def simhash_candidate_pairs_refined(
         f"(shiftright({fp}, {starts[i]}) & {(1 << lens[i]) - 1})"
         for i in range(n_blocks)
     ]
-    keys = [
-        "xxhash64(cast({ci} as bigint), {blks})".format(
-            ci=ci, blks=", ".join(blocks[i] for i in combo)
-        )
-        for ci, combo in enumerate(
-            itertools.combinations(range(n_blocks), exact_blocks)
-        )
-    ]
-    bands = sig.select(
-        id_col,
-        F.explode(F.array(*[F.expr(k) for k in keys])).alias("k"),
+    return F.array(
+        *[
+            F.expr(
+                f"xxhash64(cast({ci} as bigint),"
+                f" {', '.join(blocks[i] for i in combo)})"
+            )
+            for ci, combo in enumerate(
+                itertools.combinations(range(n_blocks), exact_blocks)
+            )
+        ]
     )
-    a = bands.withColumnRenamed(id_col, "id_a")
-    c = bands.withColumnRenamed(id_col, "id_b")
+
+
+def hamming_within(
+    pairs: DataFrame, a_fp: str, b_fp: str, max_hamming: int
+) -> DataFrame:
+    """The exact near-dup verify: ``pairs`` plus a bigint ``hamming`` =
+    popcount(a_fp XOR b_fp), keeping rows within ``max_hamming``."""
+    return pairs.withColumn(
+        "hamming", F.expr(f"cast(bit_count({a_fp} ^ {b_fp}) as bigint)")
+    ).filter(F.col("hamming") <= max_hamming)
+
+
+def simhash_candidate_pairs(
+    sig: DataFrame,
+    id_col: str = "doc_id",
+    n_blocks: int = 6,
+    exact_blocks: int = 3,
+) -> DataFrame:
+    """Near-dup candidate pairs (id_a < id_b) over the 64-bit fingerprint
+    column ``fp``: one explode of fingerprint_keys + ONE long-key
+    self-join, deduplicated (a pair sharing several keys is emitted
+    once).  Complete for hamming <= n_blocks - exact_blocks."""
+    keyed = sig.select(
+        id_col,
+        F.explode(fingerprint_keys("fp", n_blocks, exact_blocks)).alias("k"),
+    )
+    a = keyed.withColumnRenamed(id_col, "id_a")
+    c = keyed.withColumnRenamed(id_col, "id_b")
     return (
         a.join(c, "k")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -687,25 +679,17 @@ def simhash_near_dup_pairs(
     """End-to-end simhash near-dup pipeline: 64-bit signatures -> blocked
     candidates -> XOR-popcount hamming verify (<= max_hamming).
 
-    ``scheme="bands"`` (4x16-bit): the pigeonhole guarantee covers
-    hamming <= 3 (4 bands, <= 3 differing bits leave one band equal) but
-    band buckets hold ~n/65536 docs — quadratic in-bucket pair counts at
-    10^10+ docs.  ``scheme="refined"`` (Manku C(6,3) block combinations,
-    simhash_candidate_pairs_refined): same hamming <= 3 completeness with
-    ~32-bit keys, near-linear candidate counts at extreme corpus sizes —
-    the 100 TB default.  Both schemes produce IDENTICAL verified output
-    (any complete candidate superset does; the hamming filter is exact).
-    Larger max_hamming thresholds would silently miss pairs whose
-    differing bits spread across all blocks, hence the raise.
+    ``scheme="bands"`` is the (4, 1) block scheme, ``scheme="refined"``
+    the (6, 3) one — the 100 TB default (fingerprint_keys has the scale
+    trade-off).  Both produce IDENTICAL verified output (any complete
+    candidate superset does; the hamming filter is exact).
     Output: (id_a, id_b, hamming)."""
     # validate before touching df so callers get ValueError, not an
     # attribute/analysis error from building the signature plan
-    if max_hamming > 3:
-        raise ValueError(
-            "blocked candidate generation is only complete for"
-            f" max_hamming <= 3; got {max_hamming}"
-        )
-    sig = simhash64(df, id_col, text_col, backend)
+    scheme_blocks(scheme, max_hamming)
+    sig = simhash64(df, id_col, text_col, backend).selectExpr(
+        id_col, f"{BANDS_TO_FP} as fp"
+    )
     return hamming_pairs_from_sig(sig, max_hamming, id_col, scheme)
 
 
@@ -715,44 +699,25 @@ def hamming_pairs_from_sig(
     id_col: str = "doc_id",
     scheme: str = "bands",
 ) -> DataFrame:
-    """Banded candidates + exact XOR-popcount hamming verify over ANY
-    64-bit signature presented as 4x16-bit band columns (band_0..band_3)
-    — shared by text simhash and image phash near-dup detection.
+    """Blocked candidates + exact XOR-popcount hamming verify over ANY
+    64-bit fingerprint held in one bigint column ``fp`` next to
+    ``id_col`` — the one near-dup kernel behind text simhash, image
+    phash, audio fingerprints and video signatures.
     Output: (id_a, id_b, hamming), complete for max_hamming <= 3."""
-    if max_hamming > 3:
-        raise ValueError(
-            "blocked candidate generation is only complete for"
-            f" max_hamming <= 3; got {max_hamming}"
-        )
+    blocks = scheme_blocks(scheme, max_hamming)
     # materialize the signature table ONCE (eager localCheckpoint): it
-    # feeds three consumers (both candidate-join sides via the band
+    # feeds three consumers (both candidate-join sides via the key
     # explode + the two verify sides), each of which otherwise
     # re-evaluates the whole tokenize+4-hash+64-sum signature pipeline
     # from the scan (round-7 plan audit: the subtree appeared 3x, 0
-    # ReusedExchange; guide §2.4).  |docs| x 5 columns — tiny.
+    # ReusedExchange; guide §2.4).  |docs| x 2 columns — tiny.
     sig = sig.localCheckpoint(eager=True)
-    if scheme == "refined":
-        cand = simhash_candidate_pairs_refined(sig, id_col)
-    else:
-        cand = simhash_candidate_pairs(sig, id_col)
-    sa = sig.selectExpr(
-        f"{id_col} as id_a",
-        *[f"band_{b} as a_band_{b}" for b in range(4)],
-    )
-    sb = sig.selectExpr(
-        f"{id_col} as id_b",
-        *[f"band_{b} as b_band_{b}" for b in range(4)],
-    )
-    hamming = " + ".join(
-        f"bit_count(a_band_{b} ^ b_band_{b})" for b in range(4)
-    )
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("hamming", F.expr(f"cast({hamming} as bigint)"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+    cand = simhash_candidate_pairs(sig, id_col, *blocks)
+    sa = sig.selectExpr(f"{id_col} as id_a", "fp as a_fp")
+    sb = sig.selectExpr(f"{id_col} as id_b", "fp as b_fp")
+    return hamming_within(
+        cand.join(sa, "id_a").join(sb, "id_b"), "a_fp", "b_fp", max_hamming
+    ).select("id_a", "id_b", "hamming")
 
 
 def containment_pairs(

@@ -309,24 +309,17 @@ def phash_near_dup_pairs(
     """IMAGE near-duplicate pairs by perceptual-hash hamming distance —
     the multimodal twin of text simhash dedup, sharing the exact same
     blocked-candidate + XOR-popcount machinery (dedup.hamming_pairs_
-    from_sig): the 64-bit phash splits into 4x16-bit bands; candidates
-    come from Manku block-combination keys by default (near-linear at
-    10^10 images), and the hamming verify is exact.
+    from_sig) on the 64-bit phash as is; candidates come from Manku
+    block-combination keys, (6, 3) by default (near-linear at 10^10
+    images), and the hamming verify is exact.
 
     Runs on the metadata column ONLY — the bytes payload never enters
     the plan (payload discipline), so at 100 TB this is a narrow scan of
     a 16-byte-per-row projection.  Output: (id_a, id_b, hamming)."""
     from ionex_spark.operators import dedup as dd
 
-    sig = images.selectExpr(
-        f"{id_col} as doc_id",
-        *[
-            f"(shiftright({phash_col}, {16 * b}) & 65535) as band_{b}"
-            for b in range(4)
-        ],
-    )
-    out = dd.hamming_pairs_from_sig(sig, max_hamming, "doc_id", scheme)
-    return out.selectExpr("id_a", "id_b", "hamming")
+    sig = images.selectExpr(f"{id_col} as doc_id", f"{phash_col} as fp")
+    return dd.hamming_pairs_from_sig(sig, max_hamming, "doc_id", scheme)
 
 
 def multimodal_near_dup_pairs(

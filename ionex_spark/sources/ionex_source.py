@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import gzip
 from collections.abc import Iterator
+from typing import Any
 
 import numpy as np
 import pandas as pd
@@ -59,48 +60,40 @@ def _parse_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 raw = gzip.decompress(raw)
             header, epochs, tec, rms = parse_ionex(raw.decode("ascii"))
             long = grids_to_long(header, epochs, tec, rms)
-            n = len(long["tecu_q"])
-            # per-map exponent (legal mid-file EXPONENT updates)
-            exp_by_epoch = dict(
-                zip(np.asarray(epochs), header.exp_per_map or [])
-            )
-            ep = np.asarray(long["epoch"])
-            rms_col = (
-                long["rms_q"]
-                if long["rms_q"] is not None
-                else np.full(n, np.nan)
-            )
-            # group the long arrays by epoch; a stable sort keeps
-            # within-map point order and handles non-contiguous epoch
-            # blocks (grids_to_long emits epoch-major, but don't assume)
-            sidx = np.argsort(ep, kind="stable")
-            ep_s = ep[sidx]
-            starts = np.flatnonzero(
-                np.r_[True, ep_s[1:] != ep_s[:-1]]
-            ) if n else np.array([], dtype=np.int64)
-            bounds = np.append(starts, n)
-            rows = []
-            for k in range(len(starts)):
-                sl = sidx[starts[k]:bounds[k + 1]]
-                e = ep_s[starts[k]]
-                rows.append({
-                    "src_file": path,
-                    "epoch": pd.Timestamp(e),
-                    "alt": header.grid.alt.start,
-                    "exp": np.int32(exp_by_epoch.get(e, header.exponent)),
-                    "lat": long["lat"][sl],
-                    "lon": long["lon"][sl],
-                    # 9999 sentinel -> NULL happens JVM-side (isnan mask);
-                    # grids_to_long NaN-masks both columns (RMS-only points
-                    # keep a NULL tecu_q, reference RMS-branch parity)
-                    "tecu_q": long["tecu_q"][sl],
-                    "rms_q": rms_col[sl],
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["src_file", "epoch", "alt", "exp",
-                         "lat", "lon", "tecu_q", "rms_q"],
-            )
+            # grids_to_long is epoch-major (meshgrid "ij" + boolean mask),
+            # so map k's points are the k-th run of its kept-point count
+            kept = tec != 9999
+            if rms is not None:
+                kept |= rms != 9999
+            counts = kept.reshape(len(tec), -1).sum(axis=1)
+            has = counts > 0
+            if not has.any():
+                continue  # no points: an empty frame has no list dtypes
+
+            def per_map(col: np.ndarray) -> list[np.ndarray]:
+                runs = np.split(col, np.cumsum(counts)[:-1])
+                return [r for r, h in zip(runs, has) if h]
+
+            yield pd.DataFrame({
+                "src_file": path,
+                "epoch": np.asarray(epochs)[has].astype("datetime64[ns]"),
+                "alt": header.grid.alt.start,
+                # per-map exponent (legal mid-file EXPONENT updates)
+                "exp": np.asarray(
+                    header.exp_per_map or [header.exponent] * len(tec),
+                    dtype=np.int32,
+                )[has],
+                "lat": per_map(long["lat"]),
+                "lon": per_map(long["lon"]),
+                # 9999 sentinel -> NULL happens JVM-side (isnan mask);
+                # grids_to_long NaN-masks both columns (RMS-only points
+                # keep a NULL tecu_q, reference RMS-branch parity)
+                "tecu_q": per_map(long["tecu_q"]),
+                "rms_q": per_map(
+                    long["rms_q"] if long["rms_q"] is not None
+                    else np.full_like(long["tecu_q"], np.nan)
+                ),
+            })
 
 
 def read_ionex(spark: SparkSession, path: str) -> DataFrame:
@@ -188,7 +181,7 @@ def export_ionex(
                 )
         return "\n".join(lines)
 
-    def fmt_epoch(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fmt_epoch(key: tuple[Any, ...], pdf: pd.DataFrame) -> pd.DataFrame:
         dense = np.full((nlat, nlon), 9999, dtype=np.int64)
         li = np.rint((pdf["lat"].to_numpy() - lat0) / dlat).astype(int)
         lo = np.rint((pdf["lon"].to_numpy() - lon0) / dlon).astype(int)
@@ -254,34 +247,27 @@ def _write_body(fh_open, hdr_only, blocks_df) -> None:
     from ionex_spark.core.ionex_io import _fmt_epoch_body, _fmt_line
 
     with fh_open() as fh:
+
+        def put(body: str, label: str) -> None:
+            for line in _fmt_line(body, label):
+                fh.write(line + "\n")
+
+        def put_map(kind: str, i: int, epoch: Any, block: str) -> None:
+            put(f"{i + 1:6}", f"START OF {kind} MAP")
+            put(_fmt_epoch_body(np.datetime64(epoch)), "EPOCH OF CURRENT MAP")
+            fh.write(block + "\n")
+            put(f"{i + 1:6}", f"END OF {kind} MAP")
+
         for line in hdr_only:
             if "END OF FILE" not in line:
                 fh.write(line + "\n")
         has_rms = False  # learned for free while streaming the TEC pass
         for i, row in enumerate(blocks_df.toLocalIterator()):
-            e = np.datetime64(row["epoch"])
             has_rms = has_rms or row["rms_block"] is not None
-            for line in _fmt_line(f"{i + 1:6}", "START OF TEC MAP"):
-                fh.write(line + "\n")
-            for line in _fmt_line(_fmt_epoch_body(e), "EPOCH OF CURRENT MAP"):
-                fh.write(line + "\n")
-            fh.write(row["block"] + "\n")
-            for line in _fmt_line(f"{i + 1:6}", "END OF TEC MAP"):
-                fh.write(line + "\n")
+            put_map("TEC", i, row["epoch"], row["block"])
         # RMS pass after all TEC maps (src/record/formatting.rs:119-201)
         if has_rms:
             for i, row in enumerate(blocks_df.toLocalIterator()):
-                if row["rms_block"] is None:
-                    continue
-                e = np.datetime64(row["epoch"])
-                for line in _fmt_line(f"{i + 1:6}", "START OF RMS MAP"):
-                    fh.write(line + "\n")
-                for line in _fmt_line(
-                    _fmt_epoch_body(e), "EPOCH OF CURRENT MAP"
-                ):
-                    fh.write(line + "\n")
-                fh.write(row["rms_block"] + "\n")
-                for line in _fmt_line(f"{i + 1:6}", "END OF RMS MAP"):
-                    fh.write(line + "\n")
-        for line in _fmt_line("", "END OF FILE"):
-            fh.write(line + "\n")
+                if row["rms_block"] is not None:
+                    put_map("RMS", i, row["epoch"], row["rms_block"])
+        put("", "END OF FILE")

@@ -85,44 +85,32 @@ def near_dup_alert_join(
     extra_stream_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """The stream-static near-dup JOIN+VERIFY core, batch/stream agnostic
-    (plain DataFrame ops): explode each side's 4x16-bit bands to banded
-    keys, inner equi-join (static corpus side broadcast), XOR-popcount
-    hamming verify.  Used by streaming_near_dup_alerts (with watermarked
-    alert dedup on top) AND by the batch-twin gate query
+    (plain DataFrame ops): fold each side's 4x16-bit bands into one
+    fingerprint, explode the shared (4, 1) block keys, inner equi-join
+    (static corpus side broadcast), then the shared XOR-popcount verify
+    (dedup.fingerprint_keys / dedup.hamming_within).  Used by
+    streaming_near_dup_alerts (with watermarked alert dedup on top) AND
+    by the batch-twin gate query
     (plans/queries_data.streaming_neardup_batch), so the driver's oracle
     row exercises the very code the stream runs.  A pair matching in
     several bands appears once per matching band — callers dedup."""
-    if max_hamming > 3:
-        raise ValueError(
-            "4x16-bit band blocking is only complete for"
-            f" max_hamming <= 3; got {max_hamming}"
-        )
-    band_keys = F.array(
-        *[
-            F.expr(f"xxhash64(cast({b} as bigint), band_{b})")
-            for b in range(4)
-        ]
+    from ionex_spark.operators import dedup as dd
+
+    blocks = dd.scheme_blocks("bands", max_hamming)
+
+    def keyed(sig: DataFrame, side: str, *extra: str) -> DataFrame:
+        fp = f"{side}_fp"
+        return sig.select(
+            F.col(id_col).alias(f"{side}_id"), *extra,
+            F.expr(dd.BANDS_TO_FP).alias(fp),
+        ).select("*", F.explode(dd.fingerprint_keys(fp, *blocks)).alias("k"))
+
+    pairs = keyed(stream_sig, "stream", *extra_stream_cols).join(
+        F.broadcast(keyed(corpus_sig, "corpus")), "k"
     )
-    s = stream_sig.select(
-        F.col(id_col).alias("stream_id"),
-        *[F.col(c) for c in extra_stream_cols],
-        *[F.col(f"band_{b}").alias(f"s_band_{b}") for b in range(4)],
-        F.explode(band_keys).alias("k"),
-    )
-    c = corpus_sig.select(
-        F.col(id_col).alias("corpus_id"),
-        *[F.col(f"band_{b}").alias(f"c_band_{b}") for b in range(4)],
-        F.explode(band_keys).alias("k"),
-    )
-    hamming = " + ".join(
-        f"bit_count(s_band_{b} ^ c_band_{b})" for b in range(4)
-    )
-    return (
-        s.join(F.broadcast(c), "k")
-        .withColumn("hamming", F.expr(f"cast({hamming} as bigint)"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("stream_id", "corpus_id", "hamming", *extra_stream_cols)
-    )
+    return dd.hamming_within(
+        pairs, "stream_fp", "corpus_fp", max_hamming
+    ).select("stream_id", "corpus_id", "hamming", *extra_stream_cols)
 
 
 def streaming_near_dup_alerts(
@@ -134,14 +122,14 @@ def streaming_near_dup_alerts(
     watermark: str = "2 hours",
 ) -> DataFrame:
     """Near-dup ALERTS against a static reference corpus: every incoming
-    64-bit signature (4x16-bit bands, the simhash/phash layout) within
+    64-bit signature (band_0..band_3, simhash64's layout) within
     hamming <= 3 of any corpus signature emits (stream_id, corpus_id,
     hamming, ts) — the ingest-side "is this already in my training set"
     check.
 
-    Shape: stream-STATIC inner equi-join on banded keys — state-free and
+    Shape: stream-STATIC inner equi-join on block keys — state-free and
     broadcastable (the reference index is the small/static side; at
-    100 TB it is bucketed by band key instead), with the same pigeonhole
+    100 TB it is bucketed by block key instead), with the same pigeonhole
     completeness guarantee as the batch operator
     (dedup.hamming_pairs_from_sig).  A pair matching in several bands
     would alert more than once, so alerts are deduplicated with
@@ -384,17 +372,16 @@ def streaming_incremental_dedup(
     rows pay the exact stream-static verify join against the corpus
     hashes.
 
-    STATELESS and append-mode safe: the m/64-word filter table is
-    materialized once at query start and each of the k bit tests is a
-    stream-static LEFT JOIN against it on word_idx — per micro-batch
-    that is k broadcasts of a constant-size table and O(1) work per
-    row, at ANY m_bits (an inlined CASE alternative scans m/64 arms
-    per row and blows past codegen limits at corpus-scale filters —
-    review finding).  No aggregation, no watermark.  The corpus is
-    static within the query; restart to pick up a corpus snapshot
-    advance, like the other stream-static joins here.  Output schema
-    matches the batch operator: (id, bloom_candidate, is_dup) —
-    is_dup exact, no false negatives."""
+    STATELESS and append-mode safe: the m/64 filter words are collected
+    once at query construction and inlined as an array literal
+    (sketch.bloom_membership_expr), so each of the k bit tests is an
+    O(1) array lookup per row and the bloom stage costs each
+    micro-batch no join.  Only bloom-positive rows pay the exact
+    stream-static LEFT JOIN against the corpus hashes.  No aggregation,
+    no watermark.  The corpus is static within the query; restart to
+    pick up a corpus snapshot advance, like the other stream-static
+    joins here.  Output schema matches the batch operator:
+    (id, bloom_candidate, is_dup) — is_dup exact, no false negatives."""
     from pyspark.sql import functions as F
 
     from ionex_spark.operators.sketch import (

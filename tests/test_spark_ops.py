@@ -181,7 +181,10 @@ def test_simhash_similarity(spark):
     assert ham(0, 2) < ham(0, 3)   # 3/60 tokens changed << disjoint vocab
     assert ham(0, 3) > 10          # unrelated docs far apart
 
-    pairs = dd.simhash_candidate_pairs(dd.simhash64(docs, backend="xxhash64"))
+    fp = dd.simhash64(docs, backend="xxhash64").selectExpr(
+        "doc_id", f"{dd.BANDS_TO_FP} as fp"
+    )
+    pairs = dd.simhash_candidate_pairs(fp, n_blocks=4, exact_blocks=1)
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     assert (0, 1) in got  # hamming 0 -> all four bands collide
 
@@ -603,12 +606,13 @@ def test_planes_for_bounds_candidate_count(spark):
 
 
 def test_simhash_refined_candidates_complete_and_near_linear(spark):
-    """The Manku C(6,3) block-combination candidate scheme must (a) find
-    EVERY pair within hamming distance 3 (the completeness guarantee:
-    <=3 damaged blocks leave >=3 intact, so some 3-combination matches)
-    and (b) keep candidate counts near-linear on uniformly random
-    fingerprints — the 16-bit band scheme's (n/65536)^2 in-bucket growth
-    is the VERDICT r2 scale flag this closes."""
+    """The Manku block-combination candidate generator must (a) find
+    EVERY pair within hamming distance 3 under both (4, 1) and (6, 3)
+    (the completeness guarantee: <=3 damaged blocks leave >=m intact, so
+    some m-combination matches) and (b) at C(6,3) keep candidate counts
+    near-linear on uniformly random fingerprints — the 16-bit band
+    scheme's (n/65536)^2 in-bucket growth is the VERDICT r2 scale flag
+    this closes."""
     import random
 
     rng = random.Random(7)
@@ -623,21 +627,21 @@ def test_simhash_refined_candidates_complete_and_near_linear(spark):
         rows.append((i + 1, twin))
         planted.add((i, i + 1))
     sig = spark.createDataFrame(
-        [
-            (i, *[(fp >> (16 * b)) & 0xFFFF for b in range(4)])
-            for i, fp in rows
-        ],
-        "doc_id bigint, band_0 bigint, band_1 bigint,"
-        " band_2 bigint, band_3 bigint",
+        # same 64 bits, two's-complement int64 range
+        [(i, fp - (1 << 64) if fp >= 1 << 63 else fp) for i, fp in rows],
+        "doc_id bigint, fp bigint",
     )
-    got = {
-        (r.id_a, r.id_b)
-        for r in dd.simhash_candidate_pairs_refined(sig).collect()
-    }
+
+    def candidates(n_blocks, exact_blocks):
+        pairs = dd.simhash_candidate_pairs(sig, "doc_id", n_blocks, exact_blocks)
+        return {(r.id_a, r.id_b) for r in pairs.collect()}
+
+    assert planted <= candidates(4, 1)  # the 4x16-bit band scheme
+    got = candidates(6, 3)
     assert planted <= got
     # random fps collide on a ~32-bit combo key with prob ~2^-32 per pair
-    # per combo: expected extras ~ 20 * C(4000,2) / 2^32 < 0.1.  The band
-    # scheme would produce ~4 * C(4000,2) / 65536 ~ 488 here.
+    # per combo: expected extras ~ 20 * C(4000,2) / 2^32 < 0.1.  The (4, 1)
+    # band scheme would produce ~4 * C(4000,2) / 65536 ~ 488 here.
     assert len(got - planted) <= n // 100 + 5
 
 
